@@ -40,8 +40,7 @@ object Condensation {
   /** Per-vertex topological layer after exactly k max-plus supersteps over
     * the condensation of `edges`: (vid, scc_id, layer_k). */
   def topoLayers(spark: SparkSession, edges: DataFrame, k: Int,
-                 assumeDistinct: Boolean = false,
-                 broadcastMaxRows: Long = 500000L): DataFrame = {
+                 assumeDistinct: Boolean = false): DataFrame = {
     val scc = StronglyConnectedComponents.run(spark, edges,
       assumeDistinct = assumeDistinct).localCheckpoint(true)
     val ce  = condense(edges, scc).localCheckpoint(true)
@@ -50,8 +49,7 @@ object Condensation {
     // broadcasts instead of re-shuffling per max-plus superstep; the
     // membership count is a cheap scan of the eager scc checkpoint
     val nV = scc.count()
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
+    val pin = Superstep.pin(nV) _
     val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var st = scc.select(col("scc_id").as("c")).distinct()
       .select(col("c"), lit(0L).as("l"))

@@ -23,8 +23,7 @@ import org.apache.spark.storage.StorageLevel
 object ConnectedComponents {
 
   def run(spark: SparkSession, edges: DataFrame,
-          numPartitions: Int = 0, maxIter: Int = 100,
-          broadcastMaxRows: Long = 500000L): DataFrame = {
+          numPartitions: Int = 0, maxIter: Int = 100): DataFrame = {
     // explicit numPartitions honored exactly; otherwise right-sized from the
     // materialized symmetric edge count (same rationale as PageRank.run)
     val laid =
@@ -35,15 +34,14 @@ object ConnectedComponents {
         GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
           spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
       }
-    runLaid(spark, laid, maxIter, broadcastMaxRows)
+    runLaid(spark, laid, maxIter)
   }
 
   /** [[run]] core over a pre-laid-out symmetric edge table (cached,
     * src-hash-partitioned `(edges, |E|, parts)` — e.g. DocGraph.laidSym's
     * one-exchange layout). The laid table is unpersisted on return. */
   private[graft] def runLaid(spark: SparkSession, laidSym: (DataFrame, Long, Int),
-                             maxIter: Int = 100,
-                             broadcastMaxRows: Long = 500000L): DataFrame = {
+                             maxIter: Int = 100): DataFrame = {
     val (sym, _, parts) = laidSym
     // lazy: the |V| count below is the materializing action (r6)
     var labels = GraphOps.vertices(sym)
@@ -55,8 +53,7 @@ object ConnectedComponents {
     // O(|V|) label side while it fits, co-partitioned SHJ beyond — never SMJ
     // (it would re-sort the cached O(|E|) edge side every superstep)
     val nV = labels.count()
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
+    val pin = Superstep.pin(nV) _
 
     var changed = 1L
     var iter    = 0
@@ -89,7 +86,7 @@ object ConnectedComponents {
       val next = msgs.unionByName(own)
         .groupBy("vid").agg(min(col("label")).as("label"), min(col("old")).as("old"))
       val mat = next.localCheckpoint(false) // materialized by the agg below
-      changed = mat.agg(sum(when(col("label") < col("old"), 1L).otherwise(0L)))
+      changed = mat.agg(coalesce(sum(when(col("label") < col("old"), 1L).otherwise(0L)), lit(0L)))
         .first().getLong(0)
       GraphOps.freeCheckpoint(labels)
       if (mid ne labels) GraphOps.freeCheckpoint(mid)
@@ -163,16 +160,15 @@ object ConnectedComponents {
    * true fixpoint the paper guarantees one min-rooted star per component.
    */
   def runAlternating(spark: SparkSession, edges: DataFrame,
-                     maxIter: Int = 50,
-                     broadcastMaxRows: Long = 500000L): DataFrame =
-    runAlternatingDetailed(spark, edges, maxIter, broadcastMaxRows)._1
+                     maxIter: Int = 50): DataFrame =
+    runAlternatingDetailed(spark, edges, maxIter)._1
 
   /** [[runAlternating]] plus the number of contraction rounds it took — the
     * round count feeds the jobs-per-round regression test (wall-clock bench
     * evidence proved contaminable; the structural job count is not). */
   private[graft] def runAlternatingDetailed(
       spark: SparkSession, edges: DataFrame,
-      maxIter: Int = 50, broadcastMaxRows: Long = 500000L): (DataFrame, Int) = {
+      maxIter: Int = 50): (DataFrame, Int) = {
     val verts = GraphOps.vertices(edges).localCheckpoint(true)
     var e = edges
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
@@ -181,8 +177,7 @@ object ConnectedComponents {
     // the per-round min tables are keyed by vertex — same broadcast-or-SHJ
     // crossover as run(); nV is a cheap count on the checkpointed vertex set
     val nV = verts.count()
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
+    val pin = Superstep.pin(nV) _
     // right-size the per-round shuffle width from the materialized edge count
     // (stars symmetrize, hence 2×) — applied as explicit repartitions on the
     // shuffle keys inside the star operators, which the downstream

@@ -209,11 +209,13 @@ object GraphOps {
    * ContextCleaner only drops checkpoint blocks after the RDD is GC'd on the
    * driver — in a tight superstep loop that lags far behind allocation and
    * shows up as spill/GC spikes, so iterative drivers free the previous
-   * superstep's blocks explicitly.
+   * superstep's blocks explicitly — through BlockShim, which releases them
+   * without `RDD.unpersist`'s per-RDD warning about truncated lineage.
    */
   def freeCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.graft.BlockShim.release(lr.rdd)
       case _ => ()
     }
 

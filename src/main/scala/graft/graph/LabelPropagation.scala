@@ -21,8 +21,7 @@ import org.apache.spark.sql.functions._
 object LabelPropagation {
 
   def run(spark: SparkSession, edges: DataFrame,
-          numPartitions: Int = 0, maxIter: Int = 20,
-          broadcastMaxRows: Long = 500000L): DataFrame = {
+          numPartitions: Int = 0, maxIter: Int = 20): DataFrame = {
     // explicit numPartitions honored exactly; otherwise right-sized from the
     // materialized symmetric edge count (same rationale as PageRank.run)
     val laid =
@@ -33,14 +32,13 @@ object LabelPropagation {
         GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
           spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
       }
-    runLaid(spark, laid, maxIter, broadcastMaxRows)
+    runLaid(spark, laid, maxIter)
   }
 
   /** [[run]] core over a pre-laid-out symmetric edge table (cached,
     * src-hash-partitioned — e.g. DocGraph.laidSym's one-exchange layout). */
   private[graft] def runLaid(spark: SparkSession, laidSym: (DataFrame, Long, Int),
-                             maxIter: Int = 20,
-                             broadcastMaxRows: Long = 500000L): DataFrame = {
+                             maxIter: Int = 20): DataFrame = {
     val (sym, _, parts) = laidSym
     // lazy: the |V| count below is the materializing action (r6)
     var labels = GraphOps.vertices(sym)
@@ -51,8 +49,7 @@ object LabelPropagation {
     // same broadcast-or-shuffle-hash selection as PageRank/CC: broadcast the
     // O(|V|) label side while it fits, co-partitioned SHJ beyond — never SMJ
     val nV = labels.count()
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
+    val pin = Superstep.pin(nV) _
 
     // one synchronous LPA superstep: most frequent neighbor label, ties →
     // smallest, via an overflow-free descending key (~label is monotone-
@@ -85,7 +82,7 @@ object LabelPropagation {
         if (steps < 2) labels
         else superstep(labels).select("vid", "label").localCheckpoint(false)
       val mat = superstep(mid).localCheckpoint(false) // materialized below
-      changed = mat.agg(sum(when(col("label") =!= col("old"), 1L).otherwise(0L)))
+      changed = mat.agg(coalesce(sum(when(col("label") =!= col("old"), 1L).otherwise(0L)), lit(0L)))
         .first().getLong(0)
       GraphOps.freeCheckpoint(labels)
       if (mid ne labels) GraphOps.freeCheckpoint(mid)

@@ -47,7 +47,7 @@ final case class PageRankConfig(
      * sort-merge would re-sort the O(|E|) cached edge side every superstep.
      */
     joinStrategy: String = "auto",
-    broadcastMaxRows: Long = 500000L,
+    broadcastMaxRows: Long = Superstep.BroadcastMaxRows,
     /** eager=true runs the truncating checkpoint as its own job before the
       * closing aggregate (2 jobs/superstep); the default false folds both
       * into ONE job per superstep (the closing aggregate materializes the

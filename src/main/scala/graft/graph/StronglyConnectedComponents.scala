@@ -40,7 +40,7 @@ import org.apache.spark.sql.functions._
  *
  * Scale shape: every step is an equi-join or aggregate on vid — no
  * cartesian, no global sort, no driver-side row data. The O(|V|) label side
- * broadcasts below `broadcastMaxRows` (shuffle-hash beyond), mirroring
+ * broadcasts below the Superstep crossover (shuffle-hash beyond), mirroring
  * ConnectedComponents; state is localCheckpoint-truncated per step. Worst
  * case (a chain of k non-trivial SCCs behind one minimum color) needs k
  * rounds — the published mitigation is recursing on both reachability sides
@@ -55,7 +55,7 @@ object StronglyConnectedComponents {
     * exchange) when the caller guarantees the input edge set is already
     * distinct — DocGraph.edges / its laid-out variants are. */
   def run(spark: SparkSession, edges: DataFrame, maxRounds: Int = 64,
-          broadcastMaxRows: Long = 500000L, verbose: Boolean = false,
+          verbose: Boolean = false,
           assumeDistinct: Boolean = false): DataFrame = {
     def say(s: => String): Unit = if (verbose) Console.err.println(s"[scc] $s")
     val t0 = System.nanoTime()
@@ -72,8 +72,8 @@ object StronglyConnectedComponents {
     // lazy: the |V| count on the next line is the materializing action (r6)
     var v = GraphOps.vertices(edges).repartition(parts, col("vid")).localCheckpoint(false)
     var nV = v.count()
-    def pin(df: DataFrame): DataFrame =
-      if (nV <= broadcastMaxRows) broadcast(df) else df.hint("shuffle_hash")
+    // sized from the CURRENT |V|: the remainder shrinks as SCCs are removed
+    val pin: DataFrame => DataFrame = df => Superstep.pin(nV)(df)
 
     /** Label propagation to fixpoint, STRIDED (r6): two supersteps per
       * driver round-trip — the first chains lazily (no `old` bookkeeping,

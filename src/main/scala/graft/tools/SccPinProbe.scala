@@ -2,11 +2,11 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.graph.StronglyConnectedComponents
+import graft.graph.{StronglyConnectedComponents, Superstep}
 import graft.operators.DocGraph
 
 /** A/B: SCC propagate pins broadcast (default crossover) vs shuffle_hash
-  * (broadcastMaxRows = 0) at the bench scale — does the per-superstep
+  * (crossover 0) at the bench scale — does the per-superstep
   * broadcast build earn its job?
   *   sbt "runMain graft.tools.SccPinProbe [sfDir] [cores]"
   */
@@ -24,16 +24,18 @@ object SccPinProbe {
     def leg(tag: String, bmr: Long): Unit = {
       val (laid, _, _) = DocGraph.laidDirected(spark, sfDir)
       val t0 = System.nanoTime()
-      val n = StronglyConnectedComponents.run(spark, laid,
-        broadcastMaxRows = bmr, assumeDistinct = true).count()
+      val n = Superstep.withBroadcastMaxRows(bmr) {
+        StronglyConnectedComponents.run(spark, laid, assumeDistinct = true).count()
+      }
       println(f"[probe] $tag bmr=$bmr rows=$n wall=${(System.nanoTime() - t0) / 1e9}%.2f s")
       laid.unpersist(false)
       spark.catalog.clearCache()
     }
-    leg("warm", 500000L)
-    leg("bc1", 500000L); leg("bc2", 500000L)
+    val bc = Superstep.BroadcastMaxRows
+    leg("warm", bc)
+    leg("bc1", bc); leg("bc2", bc)
     leg("shj1", 0L); leg("shj2", 0L)
-    leg("bc3", 500000L); leg("shj3", 0L)
+    leg("bc3", bc); leg("shj3", 0L)
     spark.stop()
   }
 }

@@ -46,7 +46,7 @@ class ColorSpec extends SparkSpec {
 
   private def engine(k: Int): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
-    DocGraph.colorIterEdges(spark, e, k)
+    DocGraph.colorIterLaid(spark, Laid.sym(e), k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

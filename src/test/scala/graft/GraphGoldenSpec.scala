@@ -79,4 +79,9 @@ class GraphGoldenSpec extends SparkSpec {
     val dang = GraphOps.danglingVertices(edgeDf(g2)).collect().map(_.getLong(0)).toSet
     assert(dang == Set(3L))
   }
+
+  test("HashMin CC on an empty laid symmetric table returns an empty label frame") {
+    val labels = ConnectedComponents.runLaid(spark, Laid.sym(edgeDf(Seq.empty)))
+    assert(labels.collect().isEmpty)
+  }
 }

@@ -149,7 +149,7 @@ class GraphPropertySpec extends SparkSpec {
     // 3→2→1→0→5; only vid 0 is a landmark (0 % 97 == 0). Forward distance
     // vid→0 is the chain position; 5 cannot reach 0 (edges point away).
     val edges = Seq((3L, 2L), (2L, 1L), (1L, 0L), (0L, 5L)).toDF("src", "dst")
-    val got = operators.DocGraph.landmarkIterEdges(spark, edges, 4)
+    val got = operators.DocGraph.landmarkIterLaid(spark, Laid.reversed(edges), 4)
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got == Map(
       0L -> ((1L, 0L, 0L)), 1L -> ((1L, 1L, 1L)), 2L -> ((1L, 2L, 2L)),

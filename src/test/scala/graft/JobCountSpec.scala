@@ -19,9 +19,9 @@ import graft.graph._
  *
  * Counting protocol: AQE is OFF in a dedicated child session (AQE splits one
  * action into one job per materialized query stage, making counts
- * plan-shape-dependent) and broadcasts are disabled via joinStrategy /
- * broadcastMaxRows = 0 (each BroadcastExchange submits its own async collect
- * job). Under those pins, jobs == driver actions exactly.
+ * plan-shape-dependent) and broadcasts are disabled via joinStrategy or
+ * a zero Superstep crossover (each BroadcastExchange submits its own async
+ * collect job). Under those pins, jobs == driver actions exactly.
  */
 class JobCountSpec extends SparkSpec {
 
@@ -42,6 +42,11 @@ class JobCountSpec extends SparkSpec {
     n.get
   }
 
+  /** [[jobsDuring]] with the Superstep crossover at 0 rows: every
+    * crossover-pinned join takes the shuffle-hash regime. */
+  private def shuffleJobs(body: => Unit): Int =
+    jobsDuring(Superstep.withBroadcastMaxRows(0L)(body))
+
   /** 31-vertex path: HashMin/LP label waves travel one hop per superstep, so
     * runs capped at 3 and 6 iterations really execute 3 and 6 (no early
     * convergence), and out-degrees are 1 (no hubs → no salting side jobs). */
@@ -61,20 +66,20 @@ class JobCountSpec extends SparkSpec {
 
   test("HashMin CC: exactly one job per strided superstep PAIR (r6)") {
     val e = pathEdges(noAqe)
-    val j4 = jobsDuring { ConnectedComponents.run(noAqe, e, maxIter = 4, broadcastMaxRows = 0L) }
-    val j8 = jobsDuring { ConnectedComponents.run(noAqe, e, maxIter = 8, broadcastMaxRows = 0L) }
+    val j4 = shuffleJobs { ConnectedComponents.run(noAqe, e, maxIter = 4) }
+    val j8 = shuffleJobs { ConnectedComponents.run(noAqe, e, maxIter = 8) }
     assert(j8 - j4 == 2, s"expected 1 job per 2 supersteps, got j4=$j4 j8=$j8")
   }
 
   test("label propagation: exactly one job per strided superstep PAIR (r6)") {
     val e = pathEdges(noAqe)
-    val j4 = jobsDuring { LabelPropagation.run(noAqe, e, maxIter = 4, broadcastMaxRows = 0L) }
-    val j8 = jobsDuring { LabelPropagation.run(noAqe, e, maxIter = 8, broadcastMaxRows = 0L) }
+    val j4 = shuffleJobs { LabelPropagation.run(noAqe, e, maxIter = 4) }
+    val j8 = shuffleJobs { LabelPropagation.run(noAqe, e, maxIter = 8) }
     assert(j8 - j4 == 2, s"expected 1 job per 2 supersteps, got j4=$j4 j8=$j8")
   }
 
   test("personalized PageRank: pinned jobs per superstep in the shuffle regime (r6)") {
-    // seeds = vid%100==0 → {0} on the 31-vertex path. broadcastMaxRows = 0
+    // seeds = vid%100==0 → {0} on the 31-vertex path. A zero crossover
     // forces the SHUFFLE regime, where the state checkpoints EAGERLY per
     // superstep (so the in-plan scalar's broadcast build never carries a
     // whole superstep inside the broadcast timeout): exactly the checkpoint
@@ -83,78 +88,87 @@ class JobCountSpec extends SparkSpec {
     // broadcast regime's zero-actions-per-superstep chain is exercised by
     // the oracle parity suite; job counts there are AQE-shaped.)
     val e = pathEdges(noAqe)
-    val j3 = jobsDuring { operators.DocGraph.pprIterEdges(noAqe, e, 3, broadcastMaxRows = 0L).count() }
-    val j6 = jobsDuring { operators.DocGraph.pprIterEdges(noAqe, e, 6, broadcastMaxRows = 0L).count() }
+    val j3 = shuffleJobs { operators.DocGraph.pprIterLaid(noAqe, Laid.directed(e), 3).count() }
+    val j6 = shuffleJobs { operators.DocGraph.pprIterLaid(noAqe, Laid.directed(e), 6).count() }
+    assert(j6 - j3 == 6, s"expected checkpoint + scalar-broadcast build per superstep, got j3=$j3 j6=$j6")
+  }
+
+  test("fixed-k PageRank: pinned jobs per superstep in the shuffle regime") {
+    // same contract as PPR and WPR: the eager state checkpoint + the
+    // transmitted-mass scalar's broadcast build, per extra superstep
+    val e = pathEdges(noAqe)
+    val j3 = shuffleJobs { operators.DocGraph.prIterLaid(noAqe, Laid.directed(e), 3).count() }
+    val j6 = shuffleJobs { operators.DocGraph.prIterLaid(noAqe, Laid.directed(e), 6).count() }
     assert(j6 - j3 == 6, s"expected checkpoint + scalar-broadcast build per superstep, got j3=$j3 j6=$j6")
   }
 
   test("HITS: pinned jobs per half-step in the shuffle regime (r6)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { operators.DocGraph.hitsIterEdges(noAqe, e, 2, broadcastMaxRows = 0L).count() }
-    val j4 = jobsDuring { operators.DocGraph.hitsIterEdges(noAqe, e, 4, broadcastMaxRows = 0L).count() }
+    val j2 = shuffleJobs { operators.DocGraph.hitsIterLaid(noAqe, Laid.directed(e), 2).count() }
+    val j4 = shuffleJobs { operators.DocGraph.hitsIterLaid(noAqe, Laid.directed(e), 4).count() }
     assert(j4 - j2 == 8, s"expected checkpoint + normalizer-broadcast build per half-step, got j2=$j2 j4=$j4")
   }
 
   test("multi-source BFS: zero extra jobs per superstep (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j4 = jobsDuring { operators.DocGraph.bfsIterEdges(noAqe, e, 4, broadcastMaxRows = 0L).count() }
-    val j8 = jobsDuring { operators.DocGraph.bfsIterEdges(noAqe, e, 8, broadcastMaxRows = 0L).count() }
+    val j4 = shuffleJobs { operators.DocGraph.bfsIterLaid(noAqe, Laid.directed(e), 4).count() }
+    val j8 = shuffleJobs { operators.DocGraph.bfsIterLaid(noAqe, Laid.directed(e), 8).count() }
     assert(j8 - j4 == 0, s"expected a k-independent job count, got j4=$j4 j8=$j8")
   }
 
   test("weighted SSSP: zero extra jobs per superstep (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j4 = jobsDuring { operators.DocGraph.ssspIterEdges(noAqe, e, 4, broadcastMaxRows = 0L).count() }
-    val j8 = jobsDuring { operators.DocGraph.ssspIterEdges(noAqe, e, 8, broadcastMaxRows = 0L).count() }
+    val j4 = shuffleJobs { operators.DocGraph.ssspIterLaid(noAqe, Laid.directed(e), 4).count() }
+    val j8 = shuffleJobs { operators.DocGraph.ssspIterLaid(noAqe, Laid.directed(e), 8).count() }
     assert(j8 - j4 == 0, s"expected a k-independent job count, got j4=$j4 j8=$j8")
   }
 
   test("truncated Katz: zero extra jobs per superstep (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j3 = jobsDuring { operators.DocGraph.katzIterEdges(noAqe, e, 3, broadcastMaxRows = 0L).count() }
-    val j6 = jobsDuring { operators.DocGraph.katzIterEdges(noAqe, e, 6, broadcastMaxRows = 0L).count() }
+    val j3 = shuffleJobs { operators.DocGraph.katzIterLaid(noAqe, Laid.directed(e), 3).count() }
+    val j6 = shuffleJobs { operators.DocGraph.katzIterLaid(noAqe, Laid.directed(e), 6).count() }
     assert(j6 - j3 == 0, s"expected a k-independent job count, got j3=$j3 j6=$j6")
   }
 
   test("weighted PageRank: pinned jobs per superstep in the shuffle regime (r6)") {
     val e = pathEdges(noAqe)
-    val j3 = jobsDuring { operators.DocGraph.wprIterEdges(noAqe, e, 3, broadcastMaxRows = 0L).count() }
-    val j6 = jobsDuring { operators.DocGraph.wprIterEdges(noAqe, e, 6, broadcastMaxRows = 0L).count() }
+    val j3 = shuffleJobs { operators.DocGraph.wprIterLaid(noAqe, Laid.directed(e), 3).count() }
+    val j6 = shuffleJobs { operators.DocGraph.wprIterLaid(noAqe, Laid.directed(e), 6).count() }
     assert(j6 - j3 == 6, s"expected checkpoint + scalar-broadcast build per superstep, got j3=$j3 j6=$j6")
   }
 
   test("greedy matching: zero extra jobs per round (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { operators.DocGraph.matchIterEdges(noAqe, e, 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { operators.DocGraph.matchIterEdges(noAqe, e, 5, broadcastMaxRows = 0L).count() }
+    val j2 = shuffleJobs { operators.DocGraph.matchIterLaid(noAqe, Laid.und(e), 2).count() }
+    val j5 = shuffleJobs { operators.DocGraph.matchIterLaid(noAqe, Laid.und(e), 5).count() }
     assert(j5 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("Luby MIS: zero extra jobs per round (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { operators.DocGraph.misIterEdges(noAqe, e, 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { operators.DocGraph.misIterEdges(noAqe, e, 5, broadcastMaxRows = 0L).count() }
+    val j2 = shuffleJobs { operators.DocGraph.misIterLaid(noAqe, Laid.sym(e), 2).count() }
+    val j5 = shuffleJobs { operators.DocGraph.misIterLaid(noAqe, Laid.sym(e), 5).count() }
     assert(j5 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("SALSA: zero extra jobs per iteration (stochastic half-steps need no normalizer)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { operators.DocGraph.salsaIterEdges(noAqe, e, 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { operators.DocGraph.salsaIterEdges(noAqe, e, 5, broadcastMaxRows = 0L).count() }
+    val j2 = shuffleJobs { operators.DocGraph.salsaIterLaid(noAqe, Laid.directed(e), 2).count() }
+    val j5 = shuffleJobs { operators.DocGraph.salsaIterLaid(noAqe, Laid.directed(e), 5).count() }
     assert(j5 - j2 == 0, s"expected an iteration-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("Luby coloring: zero extra jobs per round (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { operators.DocGraph.colorIterEdges(noAqe, e, 2, broadcastMaxRows = 0L).count() }
-    val j5 = jobsDuring { operators.DocGraph.colorIterEdges(noAqe, e, 5, broadcastMaxRows = 0L).count() }
+    val j2 = shuffleJobs { operators.DocGraph.colorIterLaid(noAqe, Laid.sym(e), 2).count() }
+    val j5 = shuffleJobs { operators.DocGraph.colorIterLaid(noAqe, Laid.sym(e), 5).count() }
     assert(j5 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j5=$j5")
   }
 
   test("k-core peel: zero extra jobs per round (lazy chain, one materializing action)") {
     val e = pathEdges(noAqe)
-    val j2 = jobsDuring { operators.DocGraph.kcoreIterEdges(noAqe, e, 2, 2, broadcastMaxRows = 0L).count() }
-    val j4 = jobsDuring { operators.DocGraph.kcoreIterEdges(noAqe, e, 2, 4, broadcastMaxRows = 0L).count() }
+    val j2 = shuffleJobs { operators.DocGraph.kcoreIterLaid(noAqe, Laid.sym(e), 2, 2).count() }
+    val j4 = shuffleJobs { operators.DocGraph.kcoreIterLaid(noAqe, Laid.sym(e), 2, 4).count() }
     assert(j4 - j2 == 0, s"expected a round-independent job count, got j2=$j2 j4=$j4")
   }
 
@@ -188,9 +202,8 @@ class JobCountSpec extends SparkSpec {
   test("alternating CC: one job per contraction round plus fixed setup") {
     val e = pathEdges(noAqe)
     var rounds = -1
-    val jobs = jobsDuring {
-      val (labels, r) =
-        ConnectedComponents.runAlternatingDetailed(noAqe, e, broadcastMaxRows = 0L)
+    val jobs = shuffleJobs {
+      val (labels, r) = ConnectedComponents.runAlternatingDetailed(noAqe, e)
       rounds = r
       // sanity: the result is still the right one (single component, min id 0)
       assert(labels.collect().forall(_.getLong(1) == 0L))

@@ -49,7 +49,7 @@ class MisSpec extends SparkSpec {
 
   private def engine(k: Int): Map[Long, Long] = {
     val e = rawEdges.toDF("src", "dst")
-    DocGraph.misIterEdges(spark, e, k)
+    DocGraph.misIterLaid(spark, Laid.sym(e), k)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
 

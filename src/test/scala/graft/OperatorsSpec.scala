@@ -388,4 +388,22 @@ class OperatorsSpec extends SparkSpec {
       .agg(min("q"), max("q")).head()
     assert(q.getDouble(0) >= 0.0 && q.getDouble(1) <= 1.0)
   }
+
+  test("simhash pairs and decontamination release every block but their result's") {
+    // the calls behind q_neardup_simhash and q_decontaminate
+    val docs = (0 until 40).map { i =>
+      (i.toLong, (1 to 30).map(j => s"w${(i * 7 + j * 3) % 11}").mkString(" "))
+    }.toDF("doc_id", "text")
+    val calls = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "simhashPairs" -> (() => Dedup.simhashPairs(docs, "doc_id", "text", maxHamming = 3)),
+      "contamination" -> (() =>
+        Dedup.contamination(docs, $"doc_id" % 10 === 0, "doc_id", "text")))
+    for ((name, call) <- calls) {
+      val before = blockRdds()
+      val out = call()
+      assert(out.count() > 0, s"$name: the corpus should produce rows")
+      val leaked = blockRdds() -- before -- checkpointRdds(out)
+      assert(leaked.isEmpty, s"$name left blocks of RDDs $leaked")
+    }
+  }
 }

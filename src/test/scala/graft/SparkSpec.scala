@@ -22,4 +22,39 @@ object TestSpark {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
+
+  /** Ids of the RDDs holding blocks in the block manager: cached tables
+    * and local checkpoints alike. */
+  def blockRdds(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  /** The RDD holding `df`'s own blocks when `df` is a checkpointed
+    * result; empty for a lazy plan, whose inputs are not the result's. */
+  def checkpointRdds(df: org.apache.spark.sql.DataFrame): Set[Int] =
+    df.queryExecution.logical match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => Set(lr.rdd.id)
+      case _ => Set.empty
+    }
+}
+
+/** Iteration layouts `(cached edges, |E|, parts)` of a small test edge
+  * frame, in the orientations DocGraph's fixed-k drivers read — the same
+  * shapes `DocGraph.laidDirected` / `laidReversed` / `laidSym` / `laidUnd`
+  * build from the document corpus. */
+object Laid {
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.functions.col
+  import graft.graph.GraphOps
+
+  private def longs(e: DataFrame): DataFrame =
+    e.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+  private def lay(e: DataFrame): (DataFrame, Long, Int) =
+    GraphOps.layoutForIteration(e,
+      e.sparkSession.conf.get("spark.sql.shuffle.partitions", "32").toInt)
+
+  def directed(e: DataFrame): (DataFrame, Long, Int) = lay(longs(e))
+  def reversed(e: DataFrame): (DataFrame, Long, Int) =
+    lay(longs(e).select(col("dst").as("src"), col("src").as("dst")))
+  def sym(e: DataFrame): (DataFrame, Long, Int) = lay(GraphOps.symmetrized(longs(e)))
+  def und(e: DataFrame): (DataFrame, Long, Int) =
+    lay(GraphOps.undirected(longs(e)).select(col("a").as("src"), col("b").as("dst")))
 }
