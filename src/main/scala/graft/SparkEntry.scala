@@ -474,8 +474,7 @@ object SparkEntry {
     // reachability ground truth, not from the engine's iteration schedule
     "q_scc" -> ((s, d) => {
       val (laid, _, _) = DocGraph.laidDirected(s, d)
-      val out = StronglyConnectedComponents.run(s, laid,
-        verbose = sys.env.contains("GRAFT_SCC_VERBOSE"), assumeDistinct = true)
+      val out = StronglyConnectedComponents.run(s, laid, assumeDistinct = true)
       laid.unpersist(false) // out is a union of eager checkpoints
       out
     }),

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
  * [[StronglyConnectedComponents]]); condensing is two membership equi-joins
  * + a distinct whose output is |condensation| ≪ |E| for web graphs (one
  * giant SCC absorbs the core). The layering loop then runs on the SMALL
- * condensed DAG: zero driver actions per superstep (lazy checkpoint chain,
- * one materializing action), same discipline as every iterative driver here.
+ * condensed DAG in [[Superstep.fixedK]]: zero driver actions per superstep
+ * (lazy checkpoint chain, one materializing action).
  */
 object Condensation {
 
@@ -41,32 +41,29 @@ object Condensation {
     * the condensation of `edges`: (vid, scc_id, layer_k). */
   def topoLayers(spark: SparkSession, edges: DataFrame, k: Int,
                  assumeDistinct: Boolean = false): DataFrame = {
-    val scc = StronglyConnectedComponents.run(spark, edges,
-      assumeDistinct = assumeDistinct).localCheckpoint(true)
+    // one eager checkpoint for the three joins below; the SCC union's own
+    // checkpoint leaves are freed once it exists
+    val sccParts = StronglyConnectedComponents.run(spark, edges,
+      assumeDistinct = assumeDistinct)
+    val scc = sccParts.localCheckpoint(true)
+    GraphOps.freeCheckpoint(sccParts)
     val ce  = condense(edges, scc).localCheckpoint(true)
     // r6 crossover pin: the layering state is one row per CONDENSATION
     // component (≤ |V|, ≪ |V| on web graphs) — below the crossover it
     // broadcasts instead of re-shuffling per max-plus superstep; the
     // membership count is a cheap scan of the eager scc checkpoint
-    val nV = scc.count()
-    val pin = Superstep.pin(nV) _
-    val inter = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var st = scc.select(col("scc_id").as("c")).distinct()
-      .select(col("c"), lit(0L).as("l"))
-      .localCheckpoint(false)
-    inter += st
-    for (_ <- 1 to k) {
-      val msgs = ce.join(pin(st), ce("cs") === st("c"))
+    val pin = Superstep.pin(scc.count()) _
+    val out = Superstep.fixedK(k,
+      scc.select(col("scc_id").as("c")).distinct().select(col("c"), lit(0L).as("l")),
+      Nil) { (st, _) =>
+      ce.join(pin(st), ce("cs") === st("c"))
         .select(ce("cd").as("c"), (col("l") + 1L).as("l"))
-      st = msgs.unionByName(st.select(col("c"), col("l")))
+        .unionByName(st.select(col("c"), col("l")))
         .groupBy("c").agg(max(col("l")).as("l"))
-        .localCheckpoint(false)
-      inter += st
+    } { (_, st) =>
+      scc.join(pin(st), scc("scc_id") === st("c"))
+        .select(col("vid"), col("scc_id"), col("l").as(s"layer$k"))
     }
-    val out = scc.join(pin(st), scc("scc_id") === st("c"))
-      .select(col("vid"), col("scc_id"), col("l").as(s"layer$k"))
-      .localCheckpoint(true)
-    inter.foreach(GraphOps.freeCheckpoint)
     GraphOps.freeCheckpoint(scc)
     GraphOps.freeCheckpoint(ce)
     out

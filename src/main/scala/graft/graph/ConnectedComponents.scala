@@ -1,8 +1,7 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /**
  * Connected components via iterative min-label hash-join propagation
@@ -22,20 +21,9 @@ import org.apache.spark.storage.StorageLevel
  */
 object ConnectedComponents {
 
-  def run(spark: SparkSession, edges: DataFrame,
-          numPartitions: Int = 0, maxIter: Int = 100): DataFrame = {
-    // explicit numPartitions honored exactly; otherwise right-sized from the
-    // materialized symmetric edge count (same rationale as PageRank.run)
-    val laid =
-      if (numPartitions > 0) {
-        val s0 = GraphOps.partitionForIteration(GraphOps.symmetrized(edges), numPartitions)
-        (s0, s0.count(), numPartitions)
-      } else {
-        GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
-          spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      }
-    runLaid(spark, laid, maxIter)
-  }
+  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 100): DataFrame =
+    runLaid(spark, GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt), maxIter)
 
   /** [[run]] core over a pre-laid-out symmetric edge table (cached,
     * src-hash-partitioned `(edges, |E|, parts)` — e.g. DocGraph.laidSym's
@@ -44,58 +32,32 @@ object ConnectedComponents {
                              maxIter: Int = 100): DataFrame = {
     val (sym, _, parts) = laidSym
     // lazy: the |V| count below is the materializing action (r6)
-    var labels = GraphOps.vertices(sym)
+    val labels = GraphOps.vertices(sym)
       .select(col("vid"), col("vid").as("label"))
       .repartition(parts, col("vid"))
       .localCheckpoint(false)
-
-    // same broadcast-or-shuffle-hash selection as PageRank: broadcast the
-    // O(|V|) label side while it fits, co-partitioned SHJ beyond — never SMJ
-    // (it would re-sort the cached O(|E|) edge side every superstep)
-    val nV = labels.count()
-    val pin = Superstep.pin(nV) _
-
-    var changed = 1L
-    var iter    = 0
-    while (changed > 0 && iter < maxIter) {
-      // STRIDED HashMin (r6): up to two supersteps per driver round-trip.
-      // The first chains lazily (no `old` bookkeeping, no action); the
-      // second carries its previous label in `old` so the counting
-      // aggregate — the ONE job of the pair — yields the new state and the
-      // exact change count together (mirrors PageRank's closing agg). A
-      // HashMin superstep at fixpoint is the identity, so stopping on the
-      // second step's zero count is the former per-superstep test at half
-      // the driver actions; cost ≤ 1 redundant superstep per run. `maxIter`
-      // is still respected EXACTLY (the tail stride shrinks to fit) — a
-      // capped run executes the same superstep count as before.
-      val steps = math.min(2, maxIter - iter)
-      val mid =
-        if (steps < 2) labels
-        else {
-          val m = sym.join(pin(labels), sym("src") === labels("vid"))
-            .select(sym("dst").as("vid"), labels("label"))
-            .unionByName(labels.select(col("vid"), col("label")))
-            .groupBy("vid").agg(min(col("label")).as("label"))
-            .localCheckpoint(false)
-          m
-        }
-      val msgs = sym.join(pin(mid), sym("src") === mid("vid"))
-        .select(sym("dst").as("vid"), mid("label"),
-          lit(null).cast("long").as("old"))
-      val own = mid.select(col("vid"), col("label"), col("label").as("old"))
-      val next = msgs.unionByName(own)
-        .groupBy("vid").agg(min(col("label")).as("label"), min(col("old")).as("old"))
-      val mat = next.localCheckpoint(false) // materialized by the agg below
-      changed = mat.agg(coalesce(sum(when(col("label") < col("old"), 1L).otherwise(0L)), lit(0L)))
-        .first().getLong(0)
-      GraphOps.freeCheckpoint(labels)
-      if (mid ne labels) GraphOps.freeCheckpoint(mid)
-      labels = mat.select("vid", "label")
-      iter += steps
-    }
+    // the O(|V|) label side broadcasts below the crossover, SHJ beyond
+    val pin = Superstep.pin(labels.count()) _
+    val out = Superstep.untilFixpoint(labels, maxIter)(
+      foldStep(sym, "src", "dst", pin, min))(_ < _)
     sym.unpersist(false)
-    labels
+    out
   }
+
+  /** One HashMin-shaped superstep over `edges`: every vertex sends its label
+    * from the `from` end of each edge to the `to` end, and its new label
+    * folds the labels it received with its own (`min` for CC; SCC's
+    * forward and backward passes fold with `min` and `max`). Maps a
+    * `(vid, label)` state to `(vid, label, old)` — the
+    * [[Superstep.untilFixpoint]] step shape: the own row carries the
+    * previous label, so the fold yields both in one aggregate. */
+  private[graph] def foldStep(edges: DataFrame, from: String, to: String,
+                              pin: DataFrame => DataFrame,
+                              fold: Column => Column)(st: DataFrame): DataFrame =
+    edges.join(pin(st), edges(from) === st("vid"))
+      .select(edges(to).as("vid"), st("label"), lit(null).cast("long").as("old"))
+      .unionByName(st.select(col("vid"), col("label"), col("label").as("old")))
+      .groupBy("vid").agg(fold(col("label")).as("label"), fold(col("old")).as("old"))
 
   // ---------------------------------------------------------------------------
   // Alternating large-star / small-star (Kiveris et al., SoCC 2014, Alg. 3):

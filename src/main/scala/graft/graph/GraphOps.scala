@@ -167,10 +167,10 @@ object GraphOps {
    * The estimate only picks the partition count — correctness never depends
    * on it, and the returned count is the exact materialized |E|.
    *
-   * Lifetime: callers whose output is EAGERLY materialized unpersist the
-   * laid table on return; callers returning LAZY plans over it (truss peel,
-   * neighborhood loops, fixed-k ccIter/lpIter) cannot, and rely on session
-   * cache hygiene (the bench clears the cache between queries; a Verify
+   * Lifetime: callers whose output is materialized (every Superstep
+   * driver, ccIter/lpIter included) unpersist the laid table on return;
+   * callers returning LAZY plans over it (truss peel, neighborhood loops)
+   * cannot, and rely on session cache hygiene (the bench clears the cache between queries; a Verify
    * sweep accumulates these small cached tables for its lifetime — stated,
    * bounded by table count × the laid edge size).
    */

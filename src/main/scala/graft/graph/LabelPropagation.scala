@@ -20,36 +20,25 @@ import org.apache.spark.sql.functions._
  */
 object LabelPropagation {
 
-  def run(spark: SparkSession, edges: DataFrame,
-          numPartitions: Int = 0, maxIter: Int = 20): DataFrame = {
-    // explicit numPartitions honored exactly; otherwise right-sized from the
-    // materialized symmetric edge count (same rationale as PageRank.run)
-    val laid =
-      if (numPartitions > 0) {
-        val s0 = GraphOps.partitionForIteration(GraphOps.symmetrized(edges), numPartitions)
-        (s0, s0.count(), numPartitions)
-      } else {
-        GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
-          spark.conf.get("spark.sql.shuffle.partitions", "32").toInt)
-      }
-    runLaid(spark, laid, maxIter)
-  }
+  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 20): DataFrame =
+    runLaid(spark, GraphOps.layoutForIteration(GraphOps.symmetrized(edges),
+      spark.conf.get("spark.sql.shuffle.partitions", "32").toInt), maxIter)
 
   /** [[run]] core over a pre-laid-out symmetric edge table (cached,
-    * src-hash-partitioned — e.g. DocGraph.laidSym's one-exchange layout). */
+    * src-hash-partitioned — e.g. DocGraph.laidSym's one-exchange layout).
+    * The laid table is unpersisted on return. */
   private[graft] def runLaid(spark: SparkSession, laidSym: (DataFrame, Long, Int),
                              maxIter: Int = 20): DataFrame = {
     val (sym, _, parts) = laidSym
     // lazy: the |V| count below is the materializing action (r6)
-    var labels = GraphOps.vertices(sym)
+    val labels = GraphOps.vertices(sym)
       .select(col("vid"), col("vid").as("label"))
       .repartition(parts, col("vid"))
       .localCheckpoint(false)
 
     // same broadcast-or-shuffle-hash selection as PageRank/CC: broadcast the
     // O(|V|) label side while it fits, co-partitioned SHJ beyond — never SMJ
-    val nV = labels.count()
-    val pin = Superstep.pin(nV) _
+    val pin = Superstep.pin(labels.count()) _
 
     // one synchronous LPA superstep: most frequent neighbor label, ties →
     // smallest, via an overflow-free descending key (~label is monotone-
@@ -66,30 +55,12 @@ object LabelPropagation {
           col("label").as("old"))
     }
 
-    var iter    = 0
-    var changed = 1L
-    while (changed > 0 && iter < maxIter) {
-      // STRIDED (r6): up to two supersteps per driver round-trip — the first
-      // chains lazily, the second's materializing aggregate folds the
-      // changed-count (the former one-job-per-superstep shape, now one job
-      // per PAIR). A synchronous-LPA superstep at `changed == 0` is the
-      // identity, so the strided stop test equals the per-superstep one;
-      // `maxIter` is respected EXACTLY (tail stride shrinks), which is
-      // load-bearing: a capped run (q_lp's maxIter = 10) must execute
-      // exactly the oracle's superstep count.
-      val steps = math.min(2, maxIter - iter)
-      val mid =
-        if (steps < 2) labels
-        else superstep(labels).select("vid", "label").localCheckpoint(false)
-      val mat = superstep(mid).localCheckpoint(false) // materialized below
-      changed = mat.agg(coalesce(sum(when(col("label") =!= col("old"), 1L).otherwise(0L)), lit(0L)))
-        .first().getLong(0)
-      GraphOps.freeCheckpoint(labels)
-      if (mid ne labels) GraphOps.freeCheckpoint(mid)
-      labels = mat.select("vid", "label")
-      iter += steps
-    }
+    // a synchronous-LPA superstep at `changed == 0` is the identity, so the
+    // strided stop test equals the per-superstep one; the exact `maxIter` is
+    // load-bearing: a capped run (q_lp's maxIter = 10) must execute exactly
+    // the oracle's superstep count
+    val out = Superstep.untilFixpoint(labels, maxIter)(superstep)(_ =!= _)
     sym.unpersist(false)
-    labels
+    out
   }
 }

@@ -39,20 +39,7 @@ final case class PageRankConfig(
     hubDegreeThreshold: Long = 0L,
     saltBuckets: Int = 8,
     /** durable checkpoint every k supersteps (resume point); lineage is truncated every superstep regardless. */
-    ckptEvery: Int = 5,
-    /**
-     * Superstep join strategy (BASELINE.json:6 "broadcast-or-shuffle hash
-     * join"): "auto" broadcasts the rank side while |V| ≤ broadcastMaxRows
-     * and uses a co-partitioned shuffle-hash join beyond that; never SMJ —
-     * sort-merge would re-sort the O(|E|) cached edge side every superstep.
-     */
-    joinStrategy: String = "auto",
-    broadcastMaxRows: Long = Superstep.BroadcastMaxRows,
-    /** eager=true runs the truncating checkpoint as its own job before the
-      * closing aggregate (2 jobs/superstep); the default false folds both
-      * into ONE job per superstep (the closing aggregate materializes the
-      * lazy checkpoint) — safe because the plan is deterministic. */
-    eagerCheckpoint: Boolean = false)
+    ckptEvery: Int = 5)
 
 /**
  * Damped power-iteration PageRank (d=0.85, dangling-mass redistribution,
@@ -132,10 +119,11 @@ object PageRank {
     val hubCount = hubs.count() // outDeg is cached — one cheap scan
 
     val d = cfg.damping
-    val strategy = cfg.joinStrategy match {
-      case "auto" => if (n <= cfg.broadcastMaxRows) "broadcast" else "shuffle_hash"
-      case s      => s
-    }
+    // Superstep's crossover (BASELINE.json:6 "broadcast-or-shuffle hash
+    // join") on |V|: broadcast the rank side below it, co-partitioned
+    // shuffle-hash beyond — never SMJ, which would re-sort the O(|E|) cached
+    // edge side every superstep
+    val pin = Superstep.pin(n) _
 
     // r6 (guide §2.4 — remove shuffles outright): in the BROADCAST regime
     // the superstep join does not need src clustering (the rank side ships
@@ -153,7 +141,7 @@ object PageRank {
     // contribution shuffle it replaces (13.1 s vs 11.3 s
     // sum-of-supersteps, HeadlineProbe).
     val e =
-      if (strategy == "broadcast") {
+      if (Superstep.broadcasts(n)) {
         val laid = eSrc.repartition(parts, col("dst")).sortWithinPartitions("dst")
           .persist(StorageLevel.MEMORY_AND_DISK)
         laid.count() // materialize from the cached src layout, then drop it
@@ -196,7 +184,7 @@ object PageRank {
       // per-destination partial sums (J1 + A1), hub-salted when needed (J4);
       // branch-wise aggregation + co-partitioned merge (r6) so the broadcast
       // regime's dst layout carries the whole superstep shuffle-free
-      val sums = Salting.contribSums(e, rankDeg, hubs, hubCount, cfg.saltBuckets, strategy)
+      val sums = Salting.contribSums(e, rankDeg, hubs, hubCount, cfg.saltBuckets, pin)
 
       val base = (1.0 - d) / n + d * dangling / n
       // both sides hash-partitioned on the key — pin SHJ so neither is sorted
@@ -210,7 +198,7 @@ object PageRank {
       val durable = cfg.ckptEvery > 0 && (iter + 1) % cfg.ckptEvery == 0
       val mat =
         if (durable) next.persist(StorageLevel.MEMORY_AND_DISK)
-        else next.localCheckpoint(cfg.eagerCheckpoint)
+        else next.localCheckpoint(false)
       // ONE closing job per superstep: grouped by physical partition it yields
       // the per-partition lineage stats (row counts) AND the global L1 +
       // transmitted-mass sums (driver folds ≤`parts` partials), while

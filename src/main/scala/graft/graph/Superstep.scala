@@ -3,8 +3,8 @@ package graft.graph
 import scala.collection.mutable.ArrayBuffer
 import scala.util.DynamicVariable
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, sum, when}
 
 /**
  * The superstep shape every iterative driver shares (the Pregel / GraphX
@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions.broadcast
  *  - the crossover — whether the state side ships as a broadcast hash
  *    relation or stays a co-partitioned shuffle-hash join (never SMJ: it
  *    would re-sort the cached O(|E|) edge side every superstep);
- *  - the fixed-k loop — how supersteps chain their checkpoints, when state
- *    is materialized, and what is freed once the result exists.
+ *  - the loops — fixed-k and to a fixpoint: how supersteps chain their
+ *    checkpoints, when state is materialized, and what is freed once the
+ *    result exists.
  */
 object Superstep {
 
@@ -77,5 +78,46 @@ object Superstep {
     states.foreach(GraphOps.freeCheckpoint)
     inputs.foreach(_.unpersist(false))
     res
+  }
+
+  /**
+   * Supersteps from `init` until no label changes, at most `maxIter` of
+   * them. The state is `(vid, label)`; `step` maps it to the next state
+   * plus `old`, each vertex's label in the state it was given. `init` must
+   * be a local checkpoint: the loop frees it with the other states.
+   *
+   * STRIDED (r6): up to two supersteps per driver round-trip. The first
+   * chains lazily (its `old` is projected away before the checkpoint); the
+   * second carries its previous label as `old`, so the counting aggregate —
+   * the ONE job of the pair — materializes both states and yields the exact
+   * number of vertices where `changed(label, old)` holds. A HashMin, LP or
+   * min/max-fold superstep at its fixpoint is the identity, so stopping on
+   * the second step's zero count is the per-superstep stop test at half the
+   * driver actions, for at most one redundant superstep per run. `maxIter`
+   * is respected EXACTLY — the tail stride shrinks to 1 — so a capped run
+   * executes the capped superstep count. The previous and the mid-pair
+   * state are freed each round; the result is a projection of the last
+   * state's checkpoint.
+   */
+  def untilFixpoint(init: DataFrame, maxIter: Int)
+                   (step: DataFrame => DataFrame)
+                   (changed: (Column, Column) => Column): DataFrame = {
+    var st = init
+    var iter = 0
+    var n = 1L
+    while (n > 0 && iter < maxIter) {
+      val stride = math.min(2, maxIter - iter)
+      val mid =
+        if (stride < 2) st
+        else step(st).select("vid", "label").localCheckpoint(false)
+      val next = step(mid).localCheckpoint(false) // materialized by the count
+      n = next.agg(coalesce(sum(when(changed(col("label"), col("old")), 1L)
+        .otherwise(0L)), lit(0L))).first().getLong(0)
+      GraphOps.freeCheckpoint(st)
+      if (mid ne st) GraphOps.freeCheckpoint(mid)
+      st = next.select("vid", "label")
+      iter += stride
+    }
+    st
   }
 }

@@ -1044,20 +1044,12 @@ object DocGraph {
     sb.toString
   }
 
-  /** Exactly k HashMin connected-component supersteps (exact integer labels).
-    * r6: reads the one-exchange cached laid symmetric table — the former
-    * inline `symmetrized(edges(…))` subtree appeared k+1 times in the
-    * single-execution plan and paid its own dedup exchanges. */
-  def ccIter(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    val (sym, _, _) = laidSym(spark, sfDir)
-    var labels = GraphOps.vertices(sym).select(col("vid"), col("vid").as("label"))
-    for (_ <- 1 to k) {
-      val msgs = sym.join(labels, sym("src") === labels("vid"))
-        .select(sym("dst").as("vid"), labels("label"))
-      labels = msgs.union(labels).groupBy("vid").agg(min(col("label")).as("label"))
-    }
-    labels
-  }
+  /** Exactly k HashMin connected-component supersteps (exact integer labels):
+    * [[ConnectedComponents.runLaid]] capped at k over the one-exchange laid
+    * symmetric table. Stopping early at a fixpoint gives the same labels —
+    * a HashMin superstep there leaves them unchanged. */
+  def ccIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    ConnectedComponents.runLaid(spark, laidSym(spark, sfDir), maxIter = k)
 
   def ccIterSql(k: Int): String = {
     val sb = new StringBuilder(graphCtes)
@@ -1073,27 +1065,11 @@ object DocGraph {
     sb.toString
   }
 
-  /** Engine formula of the PageRank base case is shared with PageRank.run; engine
-    * arithmetic and the oracle SQL agree to <1e-15 per value, pinned by round(,7). */
-
   /** Exactly k synchronous label-propagation supersteps (LabelPropagation
-    * semantics: most frequent neighbor label, ties → smallest label).
-    * r6: laid symmetric table, same rationale as [[ccIter]]. */
-  def lpIter(spark: SparkSession, sfDir: String, k: Int): DataFrame = {
-    val (sym, _, _) = laidSym(spark, sfDir)
-    var labels = GraphOps.vertices(sym).select(col("vid"), col("vid").as("label"))
-    for (_ <- 1 to k) {
-      val nbr = sym.join(labels, sym("src") === labels("vid"))
-        .select(sym("dst").as("vid"), labels("label"))
-      val freq = nbr.groupBy("vid", "label").agg(count(lit(1)).as("cnt"))
-      val winner = freq.groupBy("vid")
-        .agg(max_by(col("label"),
-          struct(col("cnt"), bitwise_not(col("label")).as("nl"))).as("newLabel"))
-      labels = labels.join(winner, Seq("vid"), "left")
-        .select(col("vid"), coalesce(col("newLabel"), col("label")).as("label"))
-    }
-    labels
-  }
+    * semantics: most frequent neighbor label, ties → smallest label):
+    * [[LabelPropagation.runLaid]] capped at k, same rationale as [[ccIter]]. */
+  def lpIter(spark: SparkSession, sfDir: String, k: Int): DataFrame =
+    LabelPropagation.runLaid(spark, laidSym(spark, sfDir), maxIter = k)
 
   def lpIterSql(k: Int): String = {
     val sb = new StringBuilder(graphCtes)

@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.graph.{PageRank, PageRankConfig}
+import graft.graph.{PageRank, PageRankConfig, Superstep}
 import graft.sources.PageSynth
 
 /** Headline-scale strategy A/B under the Bench protocol (same graph, same
@@ -27,20 +27,23 @@ object HeadlineProbe {
     val nEdges = edges.count()
     println(s"[probe] nPages=$nPages nEdges=$nEdges")
 
-    def leg(tag: String, strategy: String): Unit = {
-      val r = PageRank.run(spark, edges.toDF(),
-        PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0, joinStrategy = strategy))
+    // the join regime as a crossover (Superstep.withBroadcastMaxRows):
+    // 0 rows forces shuffle-hash, Long.MaxValue broadcasts any |V|
+    def leg(tag: String, rows: Long): Unit = {
+      val r = Superstep.withBroadcastMaxRows(rows)(PageRank.run(spark, edges.toDF(),
+        PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0)))
       val walls = r.metrics.map(_.wallMs).sorted
       val total = r.metrics.map(_.wallMs).sum / 1000.0
-      println(f"[probe] $tag strategy=$strategy sumstep=$total%.2f s " +
+      println(f"[probe] $tag crossover=$rows sumstep=$total%.2f s " +
         f"med=${walls(walls.length / 2)} ms eps_med=${nEdges * 1000.0 / walls(walls.length / 2)}%.0f")
       spark.catalog.clearCache()
     }
     // warmup matching Bench (2 iters)
     PageRank.run(spark, edges.toDF(), PageRankConfig(eps = 0.0, maxIter = 2, ckptEvery = 0))
-    leg("shj1", "shuffle_hash"); leg("shj2", "shuffle_hash")
-    leg("bc1", "broadcast"); leg("bc2", "broadcast")
-    leg("shj3", "shuffle_hash"); leg("bc3", "broadcast")
+    val (shj, bc) = (0L, Long.MaxValue)
+    leg("shj1", shj); leg("shj2", shj)
+    leg("bc1", bc); leg("bc2", bc)
+    leg("shj3", shj); leg("bc3", bc)
     spark.stop()
   }
 }

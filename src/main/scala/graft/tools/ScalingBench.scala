@@ -2,7 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.SparkSession
 
-import graft.graph.{PageRank, PageRankConfig}
+import graft.graph.{PageRank, PageRankConfig, Superstep}
 import graft.sources.PageSynth
 
 /**
@@ -54,19 +54,25 @@ object ScalingBench {
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    val strategy = sys.env.getOrElse("SPARK_GRAFT_JOIN", "auto")
+    // superstep join as a crossover: shuffle_hash = 0 rows, broadcast = any |V|
+    val crossover = sys.env.getOrElse("SPARK_GRAFT_JOIN", "auto") match {
+      case "shuffle_hash" => 0L
+      case "broadcast"    => Long.MaxValue
+      case _              => Superstep.BroadcastMaxRows
+    }
     val repeats  = sys.env.getOrElse("SPARK_GRAFT_REPEATS", "3").toInt
     // engine: "sql" = Catalyst superstep (default), "cpu" = shuffle-free
     // compute-bound control leg (see cpuLeg)
     val engine   = sys.env.getOrElse("SPARK_GRAFT_ENGINE", "sql")
     if (engine == "cpu") { cpuLeg(spark, cores, nPages, repeats); spark.stop(); return }
     val cfg = PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0,
-      numPartitions = cores, joinStrategy = strategy)
+      numPartitions = cores)
     val edges  = PageSynth.edgeList(spark, nPages, numPartitions = cores)
     val nEdges = edges.count()
 
     def onePass(maxIter: Int): Seq[graft.graph.IterMetrics] =
-      PageRank.run(spark, edges.toDF(), cfg.copy(maxIter = maxIter)).metrics
+      Superstep.withBroadcastMaxRows(crossover)(
+        PageRank.run(spark, edges.toDF(), cfg.copy(maxIter = maxIter))).metrics
     onePass(2) // warm-up
 
     def loadavg(): Double =

@@ -25,25 +25,28 @@ object SuperstepProbe {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    def once(tag: String, strategy: String): Unit = {
+    // the join regime as a crossover (Superstep.withBroadcastMaxRows):
+    // 0 rows forces shuffle-hash, Long.MaxValue broadcasts any |V|
+    def once(tag: String, rows: Long): Unit = {
       val t0 = System.nanoTime()
       val e  = DocGraph.edges(spark, sfDir)
-      val res = PageRank.run(spark, e,
-        PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0, joinStrategy = strategy))
+      val res = Superstep.withBroadcastMaxRows(rows)(PageRank.run(spark, e,
+        PageRankConfig(eps = 0.0, maxIter = iters, ckptEvery = 0)))
       val n = res.ranks.count()
       val total = (System.nanoTime() - t0) / 1e9
       val walls = res.metrics.map(_.wallMs)
       val sorted = walls.sorted
-      println(f"[probe] $tag strategy=$strategy rows=$n total=$total%.2f s " +
+      println(f"[probe] $tag crossover=$rows rows=$n total=$total%.2f s " +
         f"supersteps=${walls.size} sumstep=${walls.sum / 1000.0}%.2f s " +
         f"med=${sorted(sorted.size / 2)} ms min=${sorted.head} max=${sorted.last} ms " +
         f"layout+rest=${total - walls.sum / 1000.0}%.2f s")
       spark.catalog.clearCache()
     }
-    once("warm0", "auto")
-    once("auto1", "auto"); once("auto2", "auto")
-    once("shj1", "shuffle_hash"); once("shj2", "shuffle_hash")
-    once("bc1", "broadcast"); once("bc2", "broadcast")
+    val auto = Superstep.BroadcastMaxRows
+    once("warm0", auto)
+    once("auto1", auto); once("auto2", auto)
+    once("shj1", 0L); once("shj2", 0L)
+    once("bc1", Long.MaxValue); once("bc2", Long.MaxValue)
     spark.stop()
   }
 }

@@ -47,4 +47,14 @@ class CondensationSpec extends SparkSpec {
     assert(got == Map(6L -> 0L, 0L -> 1L, 1L -> 1L, 2L -> 1L,
       3L -> 1L, 4L -> 1L, 5L -> 1L))
   }
+
+  test("an empty edge table gives empty SCC and topo frames") {
+    val none = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val scc = StronglyConnectedComponents.run(spark, none)
+    assert(scc.columns.toSeq == Seq("vid", "scc_id"))
+    assert(scc.count() == 0)
+    val topo = Condensation.topoLayers(spark, none, 3)
+    assert(topo.columns.toSeq == Seq("vid", "scc_id", "layer3"))
+    assert(topo.count() == 0)
+  }
 }

@@ -19,9 +19,9 @@ import graft.graph._
  *
  * Counting protocol: AQE is OFF in a dedicated child session (AQE splits one
  * action into one job per materialized query stage, making counts
- * plan-shape-dependent) and broadcasts are disabled via joinStrategy or
- * a zero Superstep crossover (each BroadcastExchange submits its own async
- * collect job). Under those pins, jobs == driver actions exactly.
+ * plan-shape-dependent) and broadcasts are disabled via a zero Superstep
+ * crossover (each BroadcastExchange submits its own async collect job).
+ * Under those pins, jobs == driver actions exactly.
  */
 class JobCountSpec extends SparkSpec {
 
@@ -57,10 +57,9 @@ class JobCountSpec extends SparkSpec {
 
   test("PageRank: exactly one job per extra superstep") {
     val e = pathEdges(noAqe)
-    def cfg(k: Int) = PageRankConfig(eps = 0.0, maxIter = k, ckptEvery = 0,
-      joinStrategy = "shuffle_hash")
-    val j3 = jobsDuring { PageRank.run(noAqe, e, cfg(3)) }
-    val j6 = jobsDuring { PageRank.run(noAqe, e, cfg(6)) }
+    def cfg(k: Int) = PageRankConfig(eps = 0.0, maxIter = k, ckptEvery = 0)
+    val j3 = shuffleJobs { PageRank.run(noAqe, e, cfg(3)) }
+    val j6 = shuffleJobs { PageRank.run(noAqe, e, cfg(6)) }
     assert(j6 - j3 == 3, s"expected 1 job/superstep, got j3=$j3 j6=$j6")
   }
 
@@ -173,8 +172,8 @@ class JobCountSpec extends SparkSpec {
   }
 
   /** Like noAqe but with broadcast joins also pinned off — for operators
-    * that take no joinStrategy knob (each BroadcastExchange would submit its
-    * own async collect job and poison the count). */
+    * whose joins the Superstep crossover does not pin (each BroadcastExchange
+    * would submit its own async collect job and poison the count). */
   private lazy val noAqeNoBc: SparkSession = {
     val s = spark.newSession()
     s.conf.set("spark.sql.adaptive.enabled", "false")

@@ -33,12 +33,12 @@ class PlanSpec extends SparkSpec {
     val rankDeg = verts.select(col("vid"), lit(1.0 / n).as("w"))
     val empty   = spark.range(0).select(col("id").as("vid"))
 
-    for (strategy <- Seq("broadcast", "shuffle_hash")) {
-      val sums = Salting.contribJoin(edges, rankDeg, empty, 0L, 8, strategy)
-        .groupBy("dst").agg(sum(col("w")).as("s"))
+    for ((regime, rows) <- Seq("broadcast" -> Long.MaxValue, "shuffle_hash" -> 0L)) {
+      val sums = Superstep.withBroadcastMaxRows(rows)(
+        Salting.contribSums(edges, rankDeg, empty, 0L, 8, Superstep.pin(n)))
       sums.collect() // run through AQE so the final plan is the real one
       val plan = executed(sums)
-      assert(!plan.contains("SortMergeJoin"), s"$strategy plan has SMJ:\n$plan")
+      assert(!plan.contains("SortMergeJoin"), s"$regime plan has SMJ:\n$plan")
     }
     edges.unpersist()
   }

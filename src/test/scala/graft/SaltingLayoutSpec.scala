@@ -21,10 +21,8 @@ class SaltingLayoutSpec extends SparkSpec {
 
     val noHubs = Seq.empty[Long].toDF("vid")
     val hub7   = Seq(7L).toDF("vid")
-    val plain  = Salting.contribJoin(edges, rankDeg, noHubs, 0L, 8)
-      .groupBy("dst").agg(sum("w").as("s"))
-    val salted = Salting.contribJoin(edges, rankDeg, hub7, 1L, 8)
-      .groupBy("dst").agg(sum("w").as("s"))
+    val plain  = Salting.contribSums(edges, rankDeg, noHubs, 0L, 8, identity)
+    val salted = Salting.contribSums(edges, rankDeg, hub7, 1L, 8, identity)
 
     val p = plain.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val q = salted.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap

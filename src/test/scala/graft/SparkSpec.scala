@@ -27,13 +27,19 @@ abstract class SparkSpec extends AnyFunSuite {
     * and local checkpoints alike. */
   def blockRdds(): Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
 
-  /** The RDD holding `df`'s own blocks when `df` is a checkpointed
-    * result; empty for a lazy plan, whose inputs are not the result's. */
-  def checkpointRdds(df: org.apache.spark.sql.DataFrame): Set[Int] =
-    df.queryExecution.logical match {
+  /** The RDDs holding `df`'s own blocks when `df` is a checkpointed
+    * result, a projection of one, or a union of such (SCC's per-round
+    * checkpoints); empty for a lazy plan, whose inputs are not the result's. */
+  def checkpointRdds(df: org.apache.spark.sql.DataFrame): Set[Int] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Union}
+    def leaves(p: LogicalPlan): Set[Int] = p match {
       case lr: org.apache.spark.sql.execution.LogicalRDD => Set(lr.rdd.id)
+      case Project(_, child) => leaves(child)
+      case u: Union => u.children.flatMap(leaves).toSet
       case _ => Set.empty
     }
+    leaves(df.queryExecution.analyzed)
+  }
 }
 
 /** Iteration layouts `(cached edges, |E|, parts)` of a small test edge

@@ -2,14 +2,16 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.graph.Superstep
+import graft.graph.{Condensation, ConnectedComponents, LabelPropagation,
+  StronglyConnectedComponents, Superstep}
 import graft.operators.DocGraph
 
 /**
- * Every fixed-k DocGraph driver through the one Superstep loop, on a small
- * graph with dangling vertices: the broadcast and shuffle-hash regimes
- * return identical rows, and a call leaves no blocks behind but its
- * result's checkpoint.
+ * Every driver on the Superstep loops — the fixed-k DocGraph drivers and
+ * topological layering (`fixedK`), CC, LP and SCC (`untilFixpoint`), capped
+ * and to convergence — on a small graph with dangling vertices: the
+ * broadcast and shuffle-hash regimes return identical rows, and a call
+ * leaves no blocks behind but its result's checkpoints.
  */
 class SuperstepSpec extends SparkSpec {
   import spark.implicits._
@@ -35,7 +37,23 @@ class SuperstepSpec extends SparkSpec {
     ("match", Laid.und, DocGraph.matchIterLaid(spark, _, 3)),
     ("landmark", Laid.reversed, DocGraph.landmarkIterLaid(spark, _, 4)),
     ("kcore", Laid.sym, DocGraph.kcoreIterLaid(spark, _, 2, 3)),
-    ("wpr", Laid.directed, DocGraph.wprIterLaid(spark, _, 2)))
+    ("wpr", Laid.directed, DocGraph.wprIterLaid(spark, _, 2)),
+    ("cc capped", Laid.sym, ConnectedComponents.runLaid(spark, _, 3)),
+    ("cc", Laid.sym, ConnectedComponents.runLaid(spark, _)),
+    ("lp capped", Laid.sym, LabelPropagation.runLaid(spark, _, 3)),
+    ("lp", Laid.sym, LabelPropagation.runLaid(spark, _)),
+    ("scc", Laid.directed,
+      unpersisting(StronglyConnectedComponents.run(spark, _, assumeDistinct = true))),
+    ("topo", Laid.directed,
+      unpersisting(Condensation.topoLayers(spark, _, 3, assumeDistinct = true))))
+
+  /** A driver that reads a laid table without owning it: the caller
+    * unpersists the table once the driver returns, as the queries do. */
+  private def unpersisting(run: DataFrame => DataFrame)(lay: Layout): DataFrame = {
+    val out = run(lay._1)
+    lay._1.unpersist(false)
+    out
+  }
 
   /** One call: its sorted rows, after checking what it left in the block manager. */
   private def rowsOf(name: String, lay: DataFrame => Layout, run: Layout => DataFrame): Seq[String] = {
